@@ -24,22 +24,16 @@ object Bench {
     SparkEntry.all.foreach { q =>
       try q.build(spark, sfDir).count() catch { case _: Throwable => }
     }
-    ops.Dedup.clearCaches(spark)
-    ops.Corpus.clearCaches(spark)
-    ops.Tokenize.clearCaches(spark)
-    ops.Multimodal.clearCaches(spark)
+    Memo.clear(spark)
     // declaration order (SparkEntry.all), not Map hash order: shared
     // first-compute (cluster frame, qualifying pairs, CC components) then
     // lands deterministically on the query that declares it, and the
     // downstream consumers measure their own marginal cost
-    def cacheCount(): Int =
-      ops.Dedup.cacheCount(spark) + ops.Corpus.cacheCount(spark) +
-        ops.Tokenize.cacheCount(spark) + ops.Multimodal.cacheCount(spark)
     // queries that POPULATED a shared memo during the in-order timed pass,
     // in declaration order — the rerun replay list (see rerunOnce)
     val declarers = scala.collection.mutable.ArrayBuffer.empty[String]
     val results0 = SparkEntry.all.map { q =>
-      val c0 = cacheCount()
+      val c0 = Memo.count(spark)
       val t0 = System.nanoTime()
       val rows = try Metrics.observe(spark, q.name)(q.build(spark, sfDir).count())
       catch { case e: Throwable =>
@@ -47,7 +41,7 @@ object Bench {
       }
       // failures are reported as -1 so a broken query can never read as fast
       val secs = if (rows >= 0) (System.nanoTime() - t0) / 1e9 else -1.0
-      if (cacheCount() > c0) declarers += q.name
+      if (Memo.count(spark) > c0) declarers += q.name
       (q.name, secs, rows)
     }
     // CONTENTION RE-RUN GUARDS: a single driver-window run can catch
@@ -122,23 +116,25 @@ object Bench {
     // target that is itself a declarer re-pays its own build, as in-order.
     val declIdx = SparkEntry.all.map(_.name).zipWithIndex.toMap
     def rerunOnce(name: String, secs: Double, why: String): Double = {
-      ops.Dedup.clearCaches(spark)
-      ops.Corpus.clearCaches(spark)
-      ops.Tokenize.clearCaches(spark)
-      ops.Multimodal.clearCaches(spark)
+      Memo.clear(spark)
       val replay = declarers.filter(d => declIdx(d) < declIdx.getOrElse(name, 0))
-      replay.foreach { d =>
-        try SparkEntry.all.find(_.name == d).get.build(spark, sfDir).count()
-        catch { case _: Throwable => }
+      // a failed replay leaves the target timed against cold memos — not
+      // a contention retest — so it fails the whole rerun
+      val replayFailures = replay.count { d =>
+        try { SparkEntry.all.find(_.name == d).get.build(spark, sfDir).count(); false }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] rerun $name: replay of $d failed: ${e.getMessage}")
+          true
+        }
       }
       val t0 = System.nanoTime()
-      val ok = try {
+      val ok = replayFailures == 0 && (try {
         SparkEntry.all.find(_.name == name).get.build(spark, sfDir).count(); true
-      } catch { case _: Throwable => false }
+      } catch { case _: Throwable => false })
       val secs2 = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       rerunLog(name) = (secs, secs2)
       System.err.println(f"[bench] rerun $name: $secs%.3f -> $secs2%.3f " +
-        f"(replayed ${replay.size} declarers; $why)")
+        f"(replayed ${replay.size} declarers, $replayFailures failed; $why)")
       if (secs2 > 0) math.min(secs, secs2) else secs
     }
     val results1 = results0.map { case (name, secs, rows) =>
@@ -215,10 +211,7 @@ object Bench {
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Exception => System.err.println(s"[bench] BENCH_FULL.json: $e") }
     println(fullJson)
-    ops.Dedup.clearCaches(spark)
-    ops.Corpus.clearCaches(spark)
-    ops.Tokenize.clearCaches(spark)
-    ops.Multimodal.clearCaches(spark)
+    Memo.clear(spark)
     spark.stop()
     // failures (-1) sort FIRST — a broken query must survive the byte
     // budget ahead of any timing; then slowest-first. Stop at the first

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * timed counts for MANY queries in one session —
   * `runMain graft.PlanDump <outDir> <suffix> <sfDir> <q1,q2,...>` writes
   * `<outDir>/<query>_<suffix>.txt` per query and prints one timing line
-  * each. One JVM for the whole batch instead of one Explain run per query.
+  * each. One JVM for the whole batch of queries.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -61,11 +61,15 @@ object PlanDump {
       println(f"[plandump]   $label: tasks ${nt.getAndSet(0)}, " +
         f"run ${run.getAndSet(0) / 1e3}%.1f s, cpu ${cpu.getAndSet(0) / 1e3}%.1f s, " +
         f"gc ${gc.getAndSet(0) / 1e3}%.1f s, fetchWait ${fw.getAndSet(0) / 1e3}%.1f s")
-      val top = stages.toSeq.sortBy(-_._2.sum).take(5)
-      top.foreach { case (sid, ds) =>
-        val s = ds.sorted
-        println(f"[plandump]     stage $sid: n=${s.length} sum=${s.sum / 1e3}%.1f " +
-          f"max=${s.last / 1e3}%.2f med=${s(s.length / 2) / 1e3}%.2f")
+      // copy each buffer under the lock its writer takes: a straggling
+      // onTaskEnd may still append while the stats are read
+      val top = stages.toSeq.map { case (sid, b) => (sid, b.synchronized(b.sorted)) }
+        .sortBy(-_._2.sum).take(5)
+      top.foreach { case (sid, s) =>
+        val n   = s.length
+        val med = if (n % 2 == 1) s(n / 2).toDouble else (s(n / 2 - 1) + s(n / 2)) / 2.0
+        println(f"[plandump]     stage $sid: n=$n sum=${s.sum / 1e3}%.1f " +
+          f"max=${s.last / 1e3}%.2f med=${med / 1e3}%.2f")
       }
       stages.clear()
     }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 
 /** The end of the dedup pipeline: collapse near-duplicate documents into
   * connected components and keep one representative per component, then
@@ -28,20 +28,20 @@ object Corpus {
     * keeps the plan from growing per iteration).
     *
     * Returns (doc_id, keeper) — keeper = min doc id of the component —
-    * memoized per (session, dir) so downstream pipelines reuse it.
+    * memoized in [[graft.Memo]] per (session, dir, maxIters) so downstream
+    * pipelines reuse it.
     */
-  private val componentCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
+  def nearDupComponents(spark: SparkSession, dir: String,
+      maxIters: Int = 15): DataFrame =
+    Memo(spark, dir, this, maxIters)(
+      componentsOf(spark, Dedup.clusterFrame(spark, dir),
+        Dedup.qualifyingClusterPairs(spark, dir), maxIters)._1)
 
-  /** Drop this session's memoized component frames (checkpoint blocks are
-    * released by the ContextCleaner once unreferenced). Pairs with
-    * [[Dedup.clearCaches]] — see `graft.ops` cache lifecycle note there.
-    */
-  def clearCaches(s: SparkSession): Unit =
-    componentCache.keys.filter(_._1 eq s).foreach(componentCache.remove)
+  /** Release the component frames this module memoized for `s`. */
+  def clearCaches(s: SparkSession): Unit = Memo.clear(s, this)
 
-  /** Memoized-frame count for `s` — the Bench rerun-replay probe. */
-  def cacheCount(s: SparkSession): Int = componentCache.keys.count(_._1 eq s)
+  /** Number of frames this module memoized for `s`. */
+  def cacheCount(s: SparkSession): Int = Memo.count(s, this)
 
   /** Partition count for one CC round's frames: enough tasks to keep each
     * under ~64k edge rows, clamped to [1, 2×defaultParallelism]. A literal
@@ -53,12 +53,6 @@ object Corpus {
     val cap    = spark.sparkContext.defaultParallelism.toLong * 2L
     math.max(1L, math.min(byData, cap)).toInt
   }
-
-  def nearDupComponents(spark: SparkSession, dir: String,
-      maxIters: Int = 15): DataFrame =
-    componentCache.getOrElseUpdate((spark, dir, maxIters),
-      componentsOf(spark, Dedup.clusterFrame(spark, dir),
-        Dedup.qualifyingClusterPairs(spark, dir), maxIters)._1)
 
   /** The CC loop over an explicit cluster graph: `clusters` needs
     * (cid, ms); `pairs` needs (cid, cid2). Returns the (doc_id, keeper)

@@ -115,9 +115,6 @@ object Retrieval {
       .groupBy("doc_id", "dl", "tok").agg(count(lit(1)).as("tf"))
   }
 
-  private def tfFrame(s: SparkSession, dir: String): DataFrame =
-    tfFrameFrom(Tables.documents(s, dir))
-
   /** BM25-scored (doc_id, score) SQL over an arbitrary documents-shaped
     * table — the core of [[bm25Sql]], and the candidate stage of the
     * composed retrieval script (q_retrieval_full).

@@ -17,7 +17,8 @@ import graft.geo.Albers
   *    through BIGINT before `% 600`;
   *  - rows with `event_id % 5 = 0` are "already processed": `geom` (struct,
   *    SRID 3005), `lenm`, `sogkt` populated via the same closed forms the
-  *    pipeline uses, so recompute is idempotent (sql_to_line.py:41 contract).
+  *    pipeline uses, so recompute is idempotent (sql_to_line.py:41 contract);
+  *    `sogkt` stays NULL where `duration = 0` (no speed over no time).
   */
 object Segments {
 
@@ -82,7 +83,7 @@ object Segments {
         struct(se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"), lit(3005).as("srid"))
       ).as("geom"),
       when(processed, lenm).as("lenm"),
-      when(processed, sogKt(lenm, duration)).as("sogkt")
+      when(processed && duration =!= 0, sogKt(lenm, duration)).as("sogkt")
     )
   }
 
@@ -130,7 +131,8 @@ object Segments {
        |    CASE WHEN processed THEN $en END AS geom_ey,
        |    CASE WHEN processed THEN 3005 END AS geom_srid,
        |    CASE WHEN processed THEN $len END AS lenm,
-       |    CASE WHEN processed THEN (($len / duration) * ${KnotsPerMps}) END AS sogkt
+       |    CASE WHEN processed AND duration <> 0
+       |      THEN (($len / duration) * ${KnotsPerMps}) END AS sogkt
        |  FROM seg_base
        |)""".stripMargin
   }

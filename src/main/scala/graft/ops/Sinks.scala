@@ -25,7 +25,8 @@ object Sinks {
 
   /** Day-scoped idempotent merge (replaceWhere-style): overwrite exactly
     * the date partitions present in `updates` — dynamic partition
-    * overwrite — leaving every other day untouched. This is the
+    * overwrite, set as a writer option rather than on the session —
+    * leaving every other day untouched. This is the
     * reference's UPDATE-in-place recovery unit (sql_to_line.py:91,126,
     * 230-234) without a transactional table format: a replayed merge
     * rewrites the same days with the same rows, so double-runs produce
@@ -36,16 +37,12 @@ object Sinks {
     * Caller contract: `updates` must carry COMPLETE days — the merge
     * replaces each touched day wholesale.
     */
-  def mergeDays(updates: DataFrame, tsCol: String, outDir: String): Unit = {
-    val spark  = updates.sparkSession
-    val before = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try updates.withColumn("date", to_date(col(tsCol)))
+  def mergeDays(updates: DataFrame, tsCol: String, outDir: String): Unit =
+    updates.withColumn("date", to_date(col(tsCol)))
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date")
       .parquet(outDir)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
-  }
 
   /** Compact a date-partitioned parquet dataset in place: rewrite each day
     * into ⌈day bytes / targetBytes⌉ files. Streaming appends and frequent

@@ -1305,12 +1305,6 @@ object Streams {
       write, stateDir, compact)
   }
 
-  /** [[hotTermsFold]] wired to a document stream. */
-  def hotTermsIngest(docs: DataFrame, k: Int,
-      stateDir: Option[String] = None, maxWindows: Option[Int] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(docs, hotTermsFold(k, write, stateDir, maxWindows))
-
   /** The cents histogram maintained as a live feed (exactly-once even
     * under replay — the [[HistFold]] protocol; the bare [[foldCentsHist]]
     * stays the right tool under exactly-once delivery).
@@ -1319,24 +1313,6 @@ object Streams {
       stateDir: Option[String] = None)
       (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     foldIngest(events, histFold(lo, width, write, stateDir))
-
-  /** q_ewma_daily's cents grid as a live durable feed. */
-  def dailyCentsIngest(events: DataFrame, stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(events, dailyCentsFold(write, stateDir))
-
-  /** q_hll_registers as a live durable feed. */
-  def hllIngest(events: DataFrame, stateDir: Option[String] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(events, hllFold(write, stateDir))
-
-  /** The windowed CMS grid as a live durable feed; `maxWindows` caps
-    * state on unbounded streams ([[cmsFold]]'s retention rule).
-    */
-  def cmsIngest(docs: DataFrame, stateDir: Option[String] = None,
-      maxWindows: Option[Int] = None)
-      (write: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    foldIngest(docs, cmsFold(write, stateDir, maxWindows))
 
   private def foldIngest(src: DataFrame,
       fold: GridFold): org.apache.spark.sql.streaming.StreamingQuery =

@@ -186,6 +186,34 @@ class SinksSpec extends SparkSpec {
     assert(snap() === first, "replayed merge changed partition contents")
   }
 
+  test("mergeDays sets dynamic overwrite on the write, not on the session") {
+    // jobs carry the session's spark.* SQL conf in their start properties
+    // (SQLExecution.withSQLConfPropagated): none started by the merge may
+    // see a session-wide dynamic partitionOverwriteMode
+    val out   = tmp()
+    val base  = Tables.events(spark, sfDir).select("event_id", "user_id", "value", "ts")
+    val tag   = "graft.test.mergeDays"
+    val modes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(tag) != null)
+          modes.add(String.valueOf(
+            js.properties.getProperty("spark.sql.sources.partitionOverwriteMode")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty(tag, "1")
+    try Sinks.mergeDays(base, "ts", out)
+    finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.GraftSparkBridge.waitListenerBus(sc, 10000)
+      sc.removeSparkListener(l)
+    }
+    assert(!modes.isEmpty, "mergeDays started no job")
+    assert(!modes.contains("dynamic"), s"a merge job saw the session conf flipped: $modes")
+  }
+
   test("csv and json sources round-trip the relational schema") {
     val out  = tmp()
     val src  = Tables.nation(spark, sfDir)
