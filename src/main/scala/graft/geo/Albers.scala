@@ -19,6 +19,15 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle. Both engines therefore evaluate the *identical* IEEE
   * double expression tree; the only cross-engine risk is libm ulp drift in
   * sin/cos/ln, absorbed by rounding declared outputs to 2 dp (meter scale).
+  *
+  * In one tree `sin(phi)` appears five times, and easting and northing share
+  * the whole `rho` subtree. Use it once per point and unconditionally, as
+  * its own projected column (see `Segments.withEndpoints`), never inside
+  * `when`/`coalesce`: Spark's subexpression elimination does not look
+  * inside conditional branches, so a wrapped tree is inlined at every use.
+  * Wrapped that way, the posting-lines merge stage grew a 47,399-byte
+  * generated method, past HotSpot's 8,000-byte huge-method limit, and the
+  * stage ran in the bytecode interpreter.
   */
 object Albers {
   // GRS80 ellipsoid + EPSG:3005 parameters (public EPSG registry values).
@@ -129,7 +138,12 @@ object Albers {
   /** Oracle side: easting/northing SQL expressions from lon/lat SQL exprs. */
   def eastNorthSql(lon: String, lat: String): (String, String) = forward(SqlAlg)(lon, lat)
 
-  /** Plain-Scala reference evaluation (unit tests / fixtures). */
+  /** Plain-Scala reference evaluation (unit tests / fixtures). Each op is
+    * the JVM function Spark's codegen calls for it — `ln` is Spark's `Log`,
+    * which runs `StrictMath.log`, not the `Math.log` intrinsic; the two
+    * disagree in the last bits — so [[forwardScala]] equals the Column
+    * path bit for bit.
+    */
   object ScalaAlg extends Alg[Double] {
     def lit(d: Double): Double            = d
     def add(a: Double, b: Double): Double = a + b
@@ -138,7 +152,7 @@ object Albers {
     def div(a: Double, b: Double): Double = a / b
     def sin(a: Double): Double            = math.sin(a)
     def cos(a: Double): Double            = math.cos(a)
-    def ln(a: Double): Double             = math.log(a)
+    def ln(a: Double): Double             = StrictMath.log(a)
     def sqrt(a: Double): Double           = math.sqrt(a)
   }
   def forwardScala(lonDeg: Double, latDeg: Double): (Double, Double) =

@@ -19,6 +19,15 @@ import graft.geo.Albers
   *  - All geometry is closed-form scalar arithmetic over built-in codegen'd
   *    functions: the whole compute path is one narrow WholeStageCodegen
   *    stage with full column pruning into the parquet scan — zero shuffles.
+  *    That stage is only fast while HotSpot compiles it, and HotSpot leaves
+  *    any method over 8,000 bytecode bytes to the interpreter. So every
+  *    site projects the endpoints once and unconditionally through
+  *    [[Segments.withEndpoints]] and applies `when`/`coalesce` over the
+  *    projected attributes: subexpression elimination does not look inside
+  *    conditional branches, and with the trees wrapped in `coalesce` and
+  *    `when` the [[merged]] stage's largest method was 47,399 bytes and
+  *    [[mergedViaJoin]]'s 29,208; projected once they are 4,136 and 3,740
+  *    (Spark 4.1.2; PostingLinesSpec guards the limit).
   *  - [[merged]] (the flagship) computes conditionally in-row
   *    (`when(geom isNull, recompute)`) — the Spark-native form of the
   *    reference's UPDATE, with no join at all. [[mergedViaJoin]] keeps the
@@ -28,7 +37,7 @@ import graft.geo.Albers
   *    derive from the same row.
   */
 object PostingLines {
-  import Segments.{lengthM, sogKt, KnotsPerMps}
+  import Segments.{sogKt, KnotsPerMps}
 
   private def cleaned(spark: SparkSession, sfDir: String): DataFrame =
     Segments.df(spark, sfDir).filter(col("duration") =!= 0)
@@ -36,41 +45,29 @@ object PostingLines {
   private def pending(spark: SparkSession, sfDir: String): DataFrame =
     cleaned(spark, sfDir).filter(col("geom").isNull)
 
-  /** Projected endpoints from the lon/lat columns of a segments frame. */
-  private def projected: (Column, Column, Column, Column) = {
-    val (se, sn) = Albers.eastNorth(col("startlon"), col("startlat"))
-    val (ee, en) = Albers.eastNorth(col("endlon"), col("endlat"))
-    (se, sn, ee, en)
-  }
-
   /** Flagship: the full main table after one pipeline run — in-row form. */
   def merged(spark: SparkSession, sfDir: String): DataFrame =
     mergedFrom(Segments.df(spark, sfDir))
 
   /** In-row merge over an arbitrary segments frame (scale probes, tests). */
-  def mergedFrom(seg: DataFrame): DataFrame = {
-    val (se, sn, ee, en) = projected
-    val lenm             = lengthM(se, sn, ee, en)
-    val newGeom = struct(
-      se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"), lit(3005).as("srid"))
-    seg.filter(col("duration") =!= 0)
-      .withColumn("geom", coalesce(col("geom"), newGeom))
-      .withColumn("lenm", coalesce(col("lenm"), lenm))
-      .withColumn("sogkt", coalesce(col("sogkt"), sogKt(lenm, col("duration"))))
-  }
+  def mergedFrom(seg: DataFrame): DataFrame =
+    Segments.withEndpoints(seg.filter(col("duration") =!= 0)) { p =>
+      Seq(
+        "geom"  -> coalesce(col("geom"), p.geom),
+        "lenm"  -> coalesce(col("lenm"), p.lenm),
+        "sogkt" -> coalesce(col("sogkt"), sogKt(p.lenm, col("duration"))))
+    }
 
   /** Reference-shaped merge: stage pending rows, compute, equi-join back on
     * `segmentid` (sql_to_line.py:230-234), coalescing computed columns in.
     */
   def mergedViaJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (se, sn, ee, en) = projected
-    val lenm             = lengthM(se, sn, ee, en)
-    val computed = pending(spark, sfDir).select(
-      col("segmentid"),
-      struct(se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"),
-        lit(3005).as("srid")).as("geom_new"),
-      lenm.as("lenm_new"),
-      sogKt(lenm, col("duration")).as("sogkt_new"))
+    val computed = Segments.withEndpoints(pending(spark, sfDir)) { p =>
+      Seq(
+        "geom_new"  -> p.geom,
+        "lenm_new"  -> p.lenm,
+        "sogkt_new" -> sogKt(p.lenm, col("duration")))
+    }.select("segmentid", "geom_new", "lenm_new", "sogkt_new")
     cleaned(spark, sfDir)
       .join(computed, Seq("segmentid"), "left_outer")
       .withColumn("geom", coalesce(col("geom"), col("geom_new")))
@@ -158,10 +155,11 @@ object PostingLines {
            |       round($eeSql, 2) AS ex, round($enSql, 2) AS ey, 3005 AS srid
            |FROM segments WHERE geom_srid IS NULL AND duration <> 0
            |ORDER BY segmentid""".stripMargin)) { (s, dir) =>
-      val (se, sn, ee, en) = projected
-      pending(s, dir).select(
-        col("segmentid"), round(se, 2).as("sx"), round(sn, 2).as("sy"),
-        round(ee, 2).as("ex"), round(en, 2).as("ey"), lit(3005).as("srid"))
+      Segments.withEndpoints(pending(s, dir)) { p =>
+        Seq("sx" -> round(p.sx, 2), "sy" -> round(p.sy, 2),
+          "ex" -> round(p.ex, 2), "ey" -> round(p.ey, 2))
+      }.select(col("segmentid"), col("sx"), col("sy"), col("ex"), col("ey"),
+        lit(3005).as("srid"))
         .orderBy("segmentid")
     },
 
@@ -173,11 +171,10 @@ object PostingLines {
            |       round((($lenSql / duration) * $KnotsPerMps), 4) AS sogkt
            |FROM segments WHERE geom_srid IS NULL AND duration <> 0
            |ORDER BY segmentid""".stripMargin)) { (s, dir) =>
-      val (se, sn, ee, en) = projected
-      val lenm             = lengthM(se, sn, ee, en)
-      pending(s, dir).select(
-        col("segmentid"), round(lenm, 2).as("lenm"),
-        round(sogKt(lenm, col("duration")), 4).as("sogkt"))
+      Segments.withEndpoints(pending(s, dir)) { p =>
+        Seq("lenm" -> round(p.lenm, 2),
+          "sogkt" -> round(sogKt(p.lenm, col("duration")), 4))
+      }.select("segmentid", "lenm", "sogkt")
         .orderBy("segmentid")
     },
 

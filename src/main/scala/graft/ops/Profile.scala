@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Q, Tables}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 
 /** Data profiling + declarative constraint checks — the quality report a
   * pipeline runs before (and after) every ingest: per-column completeness
@@ -86,8 +88,6 @@ object Profile {
     * output is identical to the sequential form.
     */
   def profileTables(tables: Seq[(DataFrame, String)]): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     require(tables.nonEmpty, "profileTables needs at least one table")
     val spark = tables.head._1.sparkSession
@@ -107,7 +107,7 @@ object Profile {
       // serial partial + merge is the cheaper total-work shape (and the
       // two tables' jobs already overlap via the futures below).
       val agg = df.agg(count(lit(1)).as("n_rows"), aggs: _*)
-      Future {
+      table -> Future {
         val row = agg.head()
         val n   = row.getAs[Long]("n_rows")
         cols.map { f =>
@@ -120,10 +120,22 @@ object Profile {
         }
       }
     }
-    val out = futures.flatMap(f => Await.result(f, Duration.Inf))
+    val out = futures.flatMap { case (table, f) => awaitTable(f, table, ProfileTimeout) }
     spark.createDataFrame(
       spark.sparkContext.parallelize(out, 1), outSchema)
   }
+
+  /** Longest wait for one table's profile job; a profile pass is one scan. */
+  private val ProfileTimeout = 30.minutes
+
+  /** `f`'s result within `timeout`, or a failure naming the table. */
+  private[graft] def awaitTable[T](f: Future[T], table: String, timeout: FiniteDuration): T =
+    try Await.result(f, timeout)
+    catch {
+      case e: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"profile of table $table did not finish within $timeout", e)
+    }
 
   private def profileSql(table: String, cols: Seq[(String, DataType)]): String =
     cols.map { case (name, dt) =>

@@ -1001,9 +1001,7 @@ object Retrieval {
     val partials = w0.groupBy("fid").agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)))
       .head().getLong(0)
-    val cores = w.sparkSession.sparkContext.defaultParallelism.toLong
-    val width = math.max(cores, partials / PairsPerAggTask + 1L)
-      .min(65536L).toInt
+    val width = pairAggWidth(partials, w.sparkSession.sparkContext.defaultParallelism)
     // The self-join itself is deliberately LEFT to AQE's coalescing (few
     // fat tasks): each join task pays a fixed ~25 ms per reduce-partition
     // FILE of the downstream pair exchange (bypass-merge writer), so the
@@ -1037,6 +1035,22 @@ object Retrieval {
     * sort-based aggregation (measured threshold ~1M groups; round 15).
     */
   private val PairsPerAggTask = 262144L
+
+  /** Most pair-aggregate tasks the exchange is allowed to get. */
+  private val MaxPairAggWidth = 65536L
+
+  /** Width of the pair-keyed exchange for `partials` partial products: one
+    * task per [[PairsPerAggTask]], at least `cores`. Past
+    * [[MaxPairAggWidth]] tasks the per-task bound cannot hold, so that fails
+    * instead of clamping the width.
+    */
+  private[graft] def pairAggWidth(partials: Long, cores: Int): Int = {
+    val needed = partials / PairsPerAggTask + 1L
+    require(needed <= MaxPairAggWidth,
+      s"tf-idf pair aggregate: $partials partial products need $needed tasks of " +
+        s"$PairsPerAggTask pairs, above the $MaxPairAggWidth-task limit")
+    math.max(cores.toLong, needed).min(MaxPairAggWidth).toInt
+  }
 
   /** The prefix-filtered variant of [[tfidfCosinePairsFrom]] — identical
     * output (RetrievalSpec proves plan-for-plan equality), with candidate

@@ -54,37 +54,66 @@ object Segments {
 
   /** Same synthesis over an arbitrary events frame (scale probes, tests). */
   def fromEvents(ev: DataFrame): DataFrame = {
-    val slon      = startLon(col("user_id"))
-    val slat      = startLat(col("event_id"))
-    val elon      = endLon(col("user_id"), col("value"))
-    val elat      = endLat(col("event_id"), col("value"))
-    val duration  = (floor(col("value")) % 600).cast("int")
-    val processed = col("event_id") % 5 === 0
-    val (se, sn)  = Albers.eastNorth(slon, slat)
-    val (ee, en)  = Albers.eastNorth(elon, elat)
-    val lenm      = lengthM(se, sn, ee, en)
-    ev.select(
+    val base = ev.select(
       col("event_id").as("segmentid"),
       col("user_id").as("uid"),
       (lit(316000000L) + col("user_id")).cast("int").as("mmsi"),
       col("ts").as("starttime"),
-      duration.as("duration"),
-      slat.as("startlat"),
-      slon.as("startlon"),
-      elat.as("endlat"),
-      elon.as("endlon"),
+      (floor(col("value")) % 600).cast("int").as("duration"),
+      startLat(col("event_id")).as("startlat"),
+      startLon(col("user_id")).as("startlon"),
+      endLat(col("event_id"), col("value")).as("endlat"),
+      endLon(col("user_id"), col("value")).as("endlon"),
       (col("event_type") === "purchase").as("isclassa"),
       (col("user_id") % 30).cast("smallint").as("classais"),
       (col("user_id") % 8).cast("smallint").as("classgen"),
       substring(col("event_type"), 1, 20).as("name"),
       (col("event_id") % 2 === 0).as("isunique"),
-      col("ts").as("lastchange"),
-      when(processed,
-        struct(se.as("sx"), sn.as("sy"), ee.as("ex"), en.as("ey"), lit(3005).as("srid"))
-      ).as("geom"),
-      when(processed, lenm).as("lenm"),
-      when(processed && duration =!= 0, sogKt(lenm, duration)).as("sogkt")
-    )
+      col("ts").as("lastchange"))
+    val processed = col("segmentid") % 5 === 0
+    withEndpoints(base) { p =>
+      Seq(
+        "geom"  -> when(processed, p.geom),
+        "lenm"  -> when(processed, p.lenm),
+        "sogkt" -> when(processed && col("duration") =!= 0, sogKt(p.lenm, col("duration"))))
+    }
+  }
+
+  /** The EPSG:3005 endpoints of one row, as attributes of the projection
+    * [[withEndpoints]] adds, and the geometry columns built over them.
+    */
+  final class Endpoints private[Segments] (val sx: Column, val sy: Column,
+      val ex: Column, val ey: Column) {
+    def geom: Column =
+      struct(sx.as("sx"), sy.as("sy"), ex.as("ex"), ey.as("ey"), lit(3005).as("srid"))
+    def lenm: Column = lengthM(sx, sy, ex, ey)
+  }
+
+  /** `df` with the columns `cols` builds over its projected endpoints: a name
+    * already in `df` is replaced in place, a new one is appended.
+    *
+    * Both endpoints (`startlon`/`startlat`, `endlon`/`endlat`) are projected
+    * once per row, unconditionally, in a projection of their own beneath the
+    * one `cols` lands in. Each projected coordinate is not cheap and is
+    * referenced more than once above, so CollapseProject keeps the two
+    * projections apart, and codegen's subexpression elimination shares the
+    * sin/ln/sqrt subtrees of easting and northing. Conditions (`when`,
+    * `coalesce`) go in `cols`, over the attributes, never around the trees:
+    * subexpression elimination does not look inside conditional branches,
+    * so a wrapped tree is inlined once per use, which pushed the merge
+    * stage's generated code past HotSpot's huge-method limit (see
+    * [[PostingLines]]).
+    */
+  def withEndpoints(df: DataFrame)(cols: Endpoints => Seq[(String, Column)]): DataFrame = {
+    val (sx, sy) = Albers.eastNorth(col("startlon"), col("startlat"))
+    val (ex, ey) = Albers.eastNorth(col("endlon"), col("endlat"))
+    val projected =
+      df.select(col("*"), sx.as("_p_sx"), sy.as("_p_sy"), ex.as("_p_ex"), ey.as("_p_ey"))
+    val out    = cols(new Endpoints(col("_p_sx"), col("_p_sy"), col("_p_ex"), col("_p_ey")))
+    val byName = out.toMap
+    val kept   = df.columns.toSeq.map(c => byName.get(c).fold(col(s"`$c`"))(_.as(c)))
+    val added  = out.collect { case (n, c) if !df.columns.contains(n) => c.as(n) }
+    projected.select(kept ++ added: _*)
   }
 
   // ---- identical arithmetic as a DuckDB CTE -------------------------------

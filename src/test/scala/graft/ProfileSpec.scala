@@ -111,4 +111,12 @@ class ProfileSpec extends SparkSpec {
       assert(rows(c) === ("pass", 0L), s"$c expected clean")
     }
   }
+
+  test("a profile job that never finishes fails the wait with the table's name") {
+    import scala.concurrent.Promise
+    import scala.concurrent.duration.DurationInt
+    val e = intercept[IllegalStateException](
+      ops.Profile.awaitTable(Promise[Int]().future, "orders", 50.millis))
+    assert(e.getMessage.contains("orders"), e.getMessage)
+  }
 }

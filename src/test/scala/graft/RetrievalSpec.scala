@@ -166,4 +166,18 @@ class RetrievalSpec extends SparkSpec {
     assert(got === want, "positional-index phrase hits diverged from direct scan")
     assert(got.nonEmpty, "no phrase matched — probe phrases went stale")
   }
+
+  test("pair-aggregate width: one task per 262,144 pairs, at least the cores, fails past 65,536") {
+    val perTask = 262144L
+    // the width before the limit check, for every input the check lets through
+    def unchecked(partials: Long, cores: Int): Int =
+      math.max(cores.toLong, partials / perTask + 1L).min(65536L).toInt
+    for (partials <- Seq(0L, 1L, perTask - 1, perTask, 10 * perTask + 7,
+           1000000000L, 65535L * perTask, 65536L * perTask - 1);
+         cores <- Seq(1, 8, 32, 5000, 70000))
+      assert(pairAggWidth(partials, cores) === unchecked(partials, cores), s"($partials, $cores)")
+    assert(pairAggWidth(65536L * perTask - 1, 4) === 65536)
+    val e = intercept[IllegalArgumentException](pairAggWidth(65536L * perTask, 4))
+    assert(e.getMessage.contains("65537 tasks"), e.getMessage)
+  }
 }
